@@ -258,9 +258,10 @@ def _collect_embeddings(e: DataFrame):
     """(ids, M, norms) numpy triple for the gather kernel, or None when
     the corpus cannot be gathered: over the per-task byte bound, ragged
     or zero dims, null embeddings (rows the matrix could not represent),
-    or non-integral ids. One tiny agg job prices the decision before
-    anything is collected — the same collect-at-build pattern as
-    llm_extras._distinct_pairs' sizing job."""
+    non-integral ids, or a repeated id (a row gather by id would score
+    one arbitrary row of the repeats). One tiny agg job prices the
+    decision before anything is collected — the same collect-at-build
+    pattern as llm_extras._distinct_pairs' sizing job."""
     import numpy as np
 
     if not _gather_feasible(e):
@@ -274,6 +275,8 @@ def _collect_embeddings(e: DataFrame):
         return None  # non-integral ids / malformed vectors: join path
     order = np.argsort(ids, kind="stable")
     ids = ids[order]
+    if (ids[1:] == ids[:-1]).any():
+        return None  # duplicate vec_id: join path scores every row
     M = np.ascontiguousarray(M[order])
     norms = np.sqrt(np.einsum("ij,ij->i", M, M))
     return ids, M, norms

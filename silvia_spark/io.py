@@ -51,6 +51,47 @@ def local_path(path: str) -> str:
         path = "/" + rest.lstrip("/")
     return path.rstrip("/")
 
+
+# --- position deletes: the one (file, row-position) key ----------------------
+# Manifest DVs, Delta DVs and Iceberg position deletes all drop rows by
+# (file, row position). Spark renders ``_metadata.file_path`` as a URI,
+# ``file:/abs/path`` with space → %20 and '%' → %25 ('+' and non-ASCII
+# stay raw); tombstones name the raw path. So the scan key is the URI
+# decoded, '+' protected from url_decode's plus-as-space rule — string
+# functions, never a regex per row.
+
+FILE_POS = ("__fp", "__ri")
+
+
+def with_file_pos(df: DataFrame, depth: int | None = None) -> DataFrame:
+    """Tag a parquet scan with its file key ``__fp`` and in-file row
+    position ``__ri`` (``_metadata`` hidden columns; the scan stays
+    vectorized). ``depth`` keys on the last ``depth`` path parts (a
+    table-relative ``col=value/file``); ``None`` on the whole local
+    path, and a non-local URI fails the read instead of matching no
+    tombstone."""
+    fp = F.col("_metadata.file_path")
+    key = (F.substring_index(fp, "/", -depth) if depth is not None else
+           F.when(fp.startswith("file:/") & ~fp.startswith("file://"),
+                  F.substr(fp, F.lit(len("file:") + 1))).otherwise(
+               F.raise_error(F.concat(
+                   F.lit("position deletes need a local file: "), fp))))
+    return df.withColumns({
+        "__fp": F.url_decode(F.replace(key, F.lit("+"), F.lit("%2B"))),
+        "__ri": F.col("_metadata.row_index")})
+
+
+def join_file_pos(tagged: DataFrame, dead: DataFrame,
+                  how: str = "left_anti") -> DataFrame:
+    """Join a ``with_file_pos`` scan to ``dead``'s (file key, row
+    position) columns: ``left_anti`` drops tombstoned rows,
+    ``left_semi`` keeps only them. Tombstones are few, so they are
+    broadcast (no shuffle). The tags stay; drop ``FILE_POS`` after."""
+    d = F.broadcast(dead.toDF("__dfp", "__dri"))
+    return tagged.join(d, (tagged["__fp"] == d["__dfp"])
+                       & (tagged["__ri"] == d["__dri"]), how)
+
+
 # (session id, sf_dir, table) → DataFrame. A DataFrame is an immutable plan,
 # so sharing the base relation across queries is safe and skips the footer
 # read + relation resolution Py4J round-trips on every contract call.

@@ -67,7 +67,8 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from silvia_spark.io import load_table, local_path as _norm
+from silvia_spark.io import (FILE_POS, join_file_pos, load_table,
+                             local_path as _norm, with_file_pos)
 from silvia_spark.operators.manifest_fs import LeaseLost, LocalFS
 from silvia_spark.registry import contract
 
@@ -870,9 +871,9 @@ def prune_entries(entries: list[dict],
 # {"dv": <name>, "dv_rows": <its tombstone count>}.
 _DELETES = "_deletes"
 _CLONE_LEASES = ".clone_leases"
-# extracts "part=val/filename.parquet" from _metadata.file_path — exactly
-# the manifest entry's ``path`` (Hive-escaping keeps '/' out of values)
-_REL_RE = r"([^/]+/[^/]+)$"
+# an entry's ``path`` is "<col>=<value>/<file>" (Hive-escaping keeps '/'
+# out of values): the tombstone key is the scan path's last two parts
+_ENTRY_DEPTH = 2
 
 
 def _entry_path(root: str, e: dict) -> str:
@@ -900,24 +901,28 @@ def _dv_frame(spark: SparkSession, root: str, entries: list[dict]):
             .parquet(*paths))
 
 
-def _with_pos(df: DataFrame) -> DataFrame:
-    """Tag a parquet scan with the entry-relative file path and the
-    in-file row position (Spark's ``_metadata`` hidden columns — scan
-    stays vectorized; the tag is metadata, not data)."""
-    return (df.withColumn("__rel", F.regexp_extract(
-                F.col("_metadata.file_path"), _REL_RE, 1))
-            .withColumn("__idx", F.col("_metadata.row_index")))
-
-
-def _anti_dv(scan: DataFrame, dv: DataFrame) -> DataFrame:
-    """Drop tombstoned rows: broadcast anti-join on (file, position).
-    The DV set is small by the write-side crossover rule (a file whose
-    tombstones exceed ``dv_max_frac`` of its rows is rewritten instead),
-    so this adds zero shuffle to the scan."""
-    return scan.join(
-        F.broadcast(dv),
-        (scan["__rel"] == dv["path"]) & (scan["__idx"] == dv["row_index"]),
-        "left_anti").drop("__rel", "__idx")
+def _tagged_scan(spark: SparkSession, root: str, m: dict,
+                 entries: list[dict]) -> DataFrame:
+    """Raw (no DV applied) logical scan of ``entries``, each row tagged
+    with its entry path and row position (``FILE_POS``) — the scan a
+    tombstone is found or matched on. One plain scan per owning root
+    (a shallow clone's files live under their source's)."""
+    by_base: dict[str, list[dict]] = {}
+    for e in entries:
+        by_base.setdefault(e.get("base", root), []).append(e)
+    pt = m.get("part_transform")
+    scans = []
+    for base, es in by_base.items():
+        s = with_file_pos(_reader(spark, base, m).parquet(
+            *[_entry_path(root, e) for e in es]), _ENTRY_DEPTH)
+        if pt and pt["col"] in s.columns:
+            s = s.drop(pt["col"])  # the hidden dir column never flows
+            #                        into tombstone/CDF records
+        scans.append(s)
+    scan = scans[0]
+    for s in scans[1:]:
+        scan = scan.unionByName(s)
+    return _to_logical(scan, m, keep=FILE_POS)
 
 
 def _entry_spec(e: dict) -> str:
@@ -969,8 +974,10 @@ def _read_entries(spark: SparkSession, root: str, m: dict,
                 # in some groups only
                 scan = scan.drop(spec)
             if es[0].get("dv"):
-                scan = _anti_dv(_with_pos(scan),
-                                _dv_frame(spark, root, es))
+                # broadcast-small: a file past ``dv_max_frac`` rewrites
+                scan = join_file_pos(
+                    with_file_pos(scan, _ENTRY_DEPTH),
+                    _dv_frame(spark, root, es)).drop(*FILE_POS)
             parts.append(scan)
     df = parts[0]
     for p in parts[1:]:
@@ -2191,31 +2198,14 @@ def commit_delete(spark: SparkSession, path: str,
         return doc["version"]  # nothing can match: no-op, no commit
     epoch0 = _vacuum_epoch(root)
 
-    by_base: dict[str, list[dict]] = {}
-    for e in cands:
-        by_base.setdefault(e.get("base", root), []).append(e)
-    scans = []
-    for base, es in by_base.items():
-        s = _with_pos(_reader(spark, base, doc).parquet(
-            *[_entry_path(root, e) for e in es]))
-        if pt and pt["col"] in s.columns:
-            s = s.drop(pt["col"])  # the hidden dir column never flows
-            #                        into tombstone/CDF records
-        scans.append(s)
-    scan = scans[0]
-    for s in scans[1:]:
-        scan = scan.unionByName(s)
-    scan = _to_logical(scan, doc, keep=("__rel", "__idx"))
+    scan = _tagged_scan(spark, root, doc, cands)
     old_dv = _dv_frame(spark, root, cands)
-    live = scan if old_dv is None else scan.join(
-        F.broadcast(old_dv),
-        (scan["__rel"] == old_dv["path"])
-        & (scan["__idx"] == old_dv["row_index"]), "left_anti")
+    live = scan if old_dv is None else join_file_pos(scan, old_dv)
     matched = (live.where(F.expr(where)) if where is not None
                else live.join(keys.select(*key_cols).distinct(),
                               key_cols, "left_semi")).persist()
-    hits = matched.select(F.col("__rel").alias("path"),
-                          F.col("__idx").alias("row_index"))
+    hits = matched.select(F.col("__fp").alias("path"),
+                          F.col("__ri").alias("row_index"))
     try:
         counts = {r["path"]: r["cnt"] for r in
                   hits.groupBy("path").agg(
@@ -2244,7 +2234,7 @@ def commit_delete(spark: SparkSession, path: str,
             # feed costs O(deleted rows) to write and to read
             cdf_files = _write_change_files(
                 spark, root,
-                _to_physical(matched.drop("__rel", "__idx"), doc)
+                _to_physical(matched.drop(*FILE_POS), doc)
                 .withColumn("_change_type", F.lit("delete")))
 
         new_entries: list[dict] = []
@@ -3102,27 +3092,10 @@ def read_changes(spark: SparkSession, path: str, since: int,
         if old_dv is not None:
             fresh = fresh.exceptAll(
                 old_dv.where(F.col("path").isin(grown_paths)))
-        gb: dict[str, list[dict]] = {}
-        for _, n in dv_grown:
-            gb.setdefault(n.get("base", root), []).append(n)
-        ptf = m_to.get("part_transform")
-        gscans = []
-        for base, es in gb.items():
-            s = _with_pos(_reader(spark, base, m_to).parquet(
-                *[_entry_path(root, e) for e in es]))
-            if ptf and ptf["col"] in s.columns:
-                s = s.drop(ptf["col"])  # hidden dir column
-            gscans.append(s)
-        scan = gscans[0]
-        for s in gscans[1:]:
-            scan = scan.unionByName(s)
-        scan = _to_logical(scan, m_to, keep=("__rel", "__idx"))
-        hit = scan.join(
-            F.broadcast(fresh),
-            (scan["__rel"] == fresh["path"])
-            & (scan["__idx"] == fresh["row_index"]), "left_semi")
+        scan = _tagged_scan(spark, root, m_to, [n for _, n in dv_grown])
+        hit = join_file_pos(scan, fresh, "left_semi")
         out = out.unionByName(
-            hit.drop("__rel", "__idx")
+            hit.drop(*FILE_POS)
             .withColumn("_change_type", F.lit("delete")))
     return out
 

@@ -34,10 +34,11 @@ dependency, no code from any Delta implementation):
   row POSITIONS of that file as deleted. The descriptor's bitmap (the
   protocol's RoaringBitmapArray in 64-bit "portable" serialization,
   inside the versioned DV file layout, z85 path/inline encodings) is
-  decoded driver-side — DVs are KBs per file — and applied
-  JVM-side: DV'd files scan with ``_metadata.row_index`` and
-  anti-join the (file, position) tombstones, the exact merge-on-read
-  shape this repo's own manifest DV layer uses. 100 TB: the scan
+  decoded driver-side — DVs are KBs per file — into (abspath, row)
+  tombstones and applied JVM-side by the engine's one position-delete
+  helper (``silvia_spark.io.with_file_pos``/``join_file_pos``, shared
+  with the manifest DV layer and iceberg_read: decoded file path, no
+  per-row regex, broadcast anti-join). 100 TB: the scan
   stays executor-parallel native parquet; only the bitmaps (bounded
   by deleted-row count, not data size) pass through the driver.
 
@@ -60,7 +61,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from silvia_spark.io import local_path
+from silvia_spark.io import (FILE_POS, join_file_pos, local_path,
+                             with_file_pos)
 
 _LOG = "_delta_log"
 
@@ -425,8 +427,7 @@ def read_delta(spark: SparkSession, path: str,
             return df
         return df.select(*[F.col(phys[f.name]).alias(f.name)
                            for f in data_fields],
-                         *[c for c in ("__fp", "__ri")
-                           if c in df.columns])
+                         *[c for c in FILE_POS if c in df.columns])
 
     out: DataFrame | None = None
     for key, files in sorted(groups.items(),
@@ -442,25 +443,10 @@ def read_delta(spark: SparkSession, path: str,
         for key, files in sorted(dv_groups.items(),
                                  key=lambda kv: tuple(
                                      (v is None, v) for v in kv[0])):
-            # _metadata.file_path is a URI: scheme-prefixed and
-            # percent-encoded (space → %20, %% → %25, non-ASCII → UTF-8
-            # escapes). Tombstone keys are raw os.path.abspath() paths, so
-            # decode the URI to a filesystem path before joining; a literal
-            # '+' is legal (unencoded) in a URI path but url_decode would
-            # turn it into a space, so protect it as %2B first (r13 ADVICE).
-            raw = (spark.read.schema(phys_data_schema)
-                   .parquet(*sorted(files))
-                   .select("*",
-                           F.url_decode(F.regexp_replace(
-                               F.regexp_replace(
-                                   F.col("_metadata.file_path"),
-                                   "^file:/+", "/"),
-                               r"\+", "%2B")).alias("__fp"),
-                           F.col("_metadata.row_index").alias("__ri")))
-            masked = (_rename(raw)
-                      .join(F.broadcast(dead), ["__fp", "__ri"],
-                            "left_anti")
-                      .drop("__fp", "__ri"))
+            # abspath tombstones meet the helper's whole-path key
+            raw = with_file_pos(spark.read.schema(phys_data_schema)
+                                .parquet(*sorted(files)))
+            masked = join_file_pos(_rename(raw), dead).drop(*FILE_POS)
             df = _with_parts(masked, key)
             out = df if out is None else out.unionByName(df)
     return out

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from silvia_spark.io import local_path
+from silvia_spark.io import join_file_pos, local_path, with_file_pos
 from silvia_spark.sources.avro_min import read_ocf
 
 _TYPES = {
@@ -223,16 +223,14 @@ def read_iceberg(spark: SparkSession, path: str,
     scan = spark.read.schema(schema).parquet(*files)
     if not del_files:
         return scan.select(*[f.name for f in schema.fields])
-    # Position-delete application = the same (file, row-position)
-    # broadcast anti-join the manifest DV layer and delta_read use.
-    # Delete rows name their target by the RECORDED file_path URI;
-    # the scan tags rows with _metadata.file_path (percent-encoded
-    # URI). Both sides normalize to the local filesystem path — the
-    # recorded side through the manifest's own uri→local mapping
-    # (driver-side, O(files)), the scan side by decoding the URI
-    # (literal '+' protected from url_decode's plus-as-space rule).
-    # Tombstones for files absent from this snapshot miss the join by
-    # construction — those files are never scanned, so they are inert.
+    # Position-delete application = the shared (file, row-position)
+    # broadcast anti-join (silvia_spark.io) the manifest DV layer and
+    # delta_read use. Delete rows name their target by the RECORDED
+    # file_path URI; it maps to the local filesystem path through the
+    # manifest's own uri→local mapping (driver-side, O(files)), the
+    # helper's whole-path scan key. Tombstones for files absent from
+    # this snapshot miss the join by construction — those files are
+    # never scanned, so they are inert.
     uri_map = spark.createDataFrame(
         [(uri, os.path.abspath(local)) for uri, local in
          {u: l for u, l in data_files}.items()],
@@ -242,13 +240,5 @@ def read_iceberg(spark: SparkSession, path: str,
                     F.col("pos").cast("long").alias("__ri"))
             .join(F.broadcast(uri_map), "__uri")
             .select("__fp", "__ri"))
-    tagged = scan.select(
-        "*",
-        F.url_decode(F.regexp_replace(
-            F.regexp_replace(F.col("_metadata.file_path"),
-                             "^file:/+", "/"),
-            r"\+", "%2B")).alias("__fp"),
-        F.col("_metadata.row_index").alias("__ri"))
-    return (tagged.join(F.broadcast(dels), ["__fp", "__ri"],
-                        "left_anti")
+    return (join_file_pos(with_file_pos(scan), dels)
             .select(*[f.name for f in schema.fields]))

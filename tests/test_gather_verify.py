@@ -89,3 +89,41 @@ def test_gather_kernel_rejects_foreign_candidate_ids(spark):
     with pytest.raises(Exception, match="not present in the corpus"):
         hits.collect()
     clear_caches()
+
+
+def test_duplicate_ids_take_the_fallback(spark, tmp_path, monkeypatch):
+    """A corpus that repeats a vec_id cannot be gathered by id (the
+    gather would score one arbitrary row of the repeats): it must take
+    the join fallback and match the forced fallback's output. The
+    repeat carries another row's vector, so the fallback finds a
+    cos = 1 pair that a gather by id would score against the wrong
+    row."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from silvia_spark.functions.llm_ops import (_collect_embeddings,
+                                                sim_join_threshold)
+
+    t = pq.read_table(f"{SF}/embeddings.parquet").slice(0, 60)
+    ids = t.column("vec_id").to_pylist()
+    dup = t.slice(1, 1).set_column(
+        0, "vec_id", pa.array([ids[0]], t.schema.field("vec_id").type))
+    sf = tmp_path / "sf_dup"
+    sf.mkdir()
+    pq.write_table(pa.concat_tables([t, dup]),
+                   str(sf / "embeddings.parquet"))
+    e = load_table(spark, str(sf), "embeddings")
+    assert _collect_embeddings(e) is None
+    clear_caches()
+    df = sim_join_threshold(spark, str(sf))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "_gather_cos_gen" not in plan
+    got = sorted(map(tuple, df.collect()))
+    monkeypatch.setenv("SILVIA_GATHER_MAX_BYTES", "1")
+    clear_caches()
+    forced = sorted(map(tuple, sim_join_threshold(spark, str(sf))
+                        .collect()))
+    clear_caches()
+    assert got == forced
+    assert any({a, b} == {ids[0], ids[1]} for a, b, *_ in got), (
+        "the repeat's cos = 1 pair is missing")

@@ -1460,6 +1460,80 @@ def test_delete_zero_hits_is_a_noop(spark, tmp_path):
                             "part") == 1
 
 
+# Partition values whose directory names differ from their URI form:
+# the scan's _metadata.file_path percent-encodes space and '%' (and the
+# Hive escape of ':' becomes %253A), while '+' and non-ASCII stay raw —
+# the decode must turn each back into the entry's on-disk path, or a
+# delete finds no hit and silently commits nothing.
+_ESCAPED = ["add to cart", "a:b", "50%off", "x+y", "üñ€", "plain"]
+_PER_PART = 10
+
+
+def _escaped_table(spark, root):
+    rows = [(i * _PER_PART + j, p, float(j))
+            for i, p in enumerate(_ESCAPED) for j in range(_PER_PART)]
+    mt.create_table(spark.createDataFrame(
+        rows, "k BIGINT, part STRING, v DOUBLE").coalesce(1), root,
+        "part", stats_cols=["k"])
+    return sorted(rows)
+
+
+def _dv_rows_by_part(root):
+    out: dict[str, int] = {}
+    for e in mt.load_manifest(root)["files"]:
+        out[e["partition"]] = (out.get(e["partition"], 0)
+                               + e.get("dv_rows", 0))
+    return out
+
+
+def _snapshot(spark, root):
+    return sorted((r.k, r.part, r.v)
+                  for r in mt.read_snapshot(spark, root).collect())
+
+
+@pytest.mark.parametrize("part", _ESCAPED)
+def test_dv_delete_on_escaped_partition(spark, tmp_path, part):
+    root = str(tmp_path / "t")
+    rows = _escaped_table(spark, root)
+    files = {e["path"] for e in mt.load_manifest(root)["files"]}
+    k = _ESCAPED.index(part) * _PER_PART + 3
+    assert mt.commit_delete(spark, root, where=f"k = {k}") == 2
+    assert {e["path"] for e in mt.load_manifest(root)["files"]} == files, (
+        "a 1-row delete rewrote files instead of writing a DV")
+    dv = _dv_rows_by_part(root)
+    assert sum(dv.values()) == 1 and len(
+        [p for p, n in dv.items() if n]) == 1
+    assert _snapshot(spark, root) == [r for r in rows if r[0] != k]
+    feed = mt.read_changes(spark, root, 1, 2, row_level=True).collect()
+    assert [(r.k, r.part, r._change_type) for r in feed] == [
+        (k, part, "delete")]
+
+
+def test_sql_delete_spans_plain_and_escaped_partitions(spark, tmp_path):
+    from silvia_spark.sources.sql_dml import delete_sql
+
+    root = str(tmp_path / "t")
+    rows = _escaped_table(spark, root)
+    # one hit in EVERY partition — plain and escaped in one commit
+    gone = {i * _PER_PART + 5 for i in range(len(_ESCAPED))}
+    assert delete_sql(spark, f"DELETE FROM `{root}` WHERE k % "
+                             f"{_PER_PART} = 5") == 2
+    assert _dv_rows_by_part(root) == {
+        e["partition"]: 1 for e in mt.load_manifest(root)["files"]}
+    assert _snapshot(spark, root) == [r for r in rows
+                                      if r[0] not in gone]
+    # a second delete on the same DV'd files unions into their vectors
+    gone2 = {i * _PER_PART + 7 for i in range(len(_ESCAPED))}
+    assert delete_sql(spark, f"DELETE FROM `{root}` WHERE k % "
+                             f"{_PER_PART} = 7") == 3
+    assert set(_dv_rows_by_part(root).values()) == {2}
+    assert _snapshot(spark, root) == [r for r in rows
+                                      if r[0] not in gone | gone2]
+    feed = mt.read_changes(spark, root, 2, 3, row_level=True).collect()
+    assert sorted((r.k, r._change_type) for r in feed) == [
+        (k, "delete") for k in sorted(gone2)]
+
+
 from pyspark.sql import Row  # noqa: E402  (concurrency tests below)
 
 

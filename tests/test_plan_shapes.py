@@ -16,6 +16,8 @@ regen and the pytest guard can never disagree.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from silvia_spark import registry
@@ -54,8 +56,6 @@ _MULTI_SCAN_OK = {
     "name,required", [(n, r) for n, r, _ in AUDITED],
     ids=[n for n, _, _ in AUDITED])
 def test_plan_exhibits_required_operators(spark, name, required):
-    import re
-
     registry.load_all_modules()
     df = registry.QUERIES[name](spark, SF_MID)
     df.toArrow()  # execute so AQE settles on the final plan
@@ -95,3 +95,63 @@ def test_plan_exhibits_required_operators(spark, name, required):
         f"{name}: the Arrow cosine kernel appears {cos_nodes}× in the "
         "final plan — a pushed-down threshold duplicated the UDF; "
         "score through score_pairs_threshold (llm_ops)")
+
+
+# --- position deletes: no regex over _metadata.file_path ---------------------
+#
+# Every DV-applying read keys its rows on the decoded file path through
+# silvia_spark.io.with_file_pos — fixed string functions. A per-row
+# regex over the path costs several times the decode on every row of
+# a DV'd file and must not come back in any of the three readers.
+
+_REGEX_FN = re.compile(r"(?i)regexp_\w*\(|\brlike\b")
+
+
+def _assert_dv_plan_has_no_regex(df):
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "file_path" in plan and "LeftAnti" in plan, (
+        "the read did not apply its deletes by (file, position)")
+    assert not _REGEX_FN.findall(plan), (
+        f"a regex runs in a DV-applying plan: {_REGEX_FN.findall(plan)}")
+
+
+def test_manifest_dv_read_has_no_path_regex(spark, tmp_path):
+    from silvia_spark.operators import manifest_table as mt
+
+    root = str(tmp_path / "t")
+    mt.create_table(spark.createDataFrame(
+        [(i, "a:b" if i % 2 else "p", float(i)) for i in range(40)],
+        "k BIGINT, part STRING, v DOUBLE").coalesce(1), root, "part",
+        stats_cols=["k"])
+    mt.commit_delete(spark, root, where="k IN (3, 4)")
+    _assert_dv_plan_has_no_regex(mt.read_snapshot(spark, root))
+
+
+def test_delta_dv_read_has_no_path_regex(spark, tmp_path):
+    from silvia_spark.sources.delta_read import read_delta
+    from tests.test_delta_read import _commit, _dv_file, _fixture
+
+    root, (_a0, _b0, a1, _n0) = _fixture(tmp_path)
+    _commit(root, 2, [
+        {"add": {"path": a1, "partitionValues": {"p": "a"}, "size": 1,
+                 "modificationTime": 0, "dataChange": False,
+                 "deletionVector": _dv_file(root, [0, 2])}},
+    ])
+    _assert_dv_plan_has_no_regex(read_delta(spark, root))
+
+
+def test_iceberg_position_delete_read_has_no_path_regex(spark, tmp_path):
+    from silvia_spark.sources.iceberg_read import read_iceberg
+    from tests.test_iceberg_read import (_data_file, _entry, _manifest,
+                                         _metadata, _mlist,
+                                         _pos_delete_file)
+
+    root = str(tmp_path / "ice")
+    fa = _data_file(root, "data/a.parquet", [1, 2, 3], "a")
+    m1 = _manifest(root, "m1.avro", [_entry(fa, rows=3)])
+    dl = _pos_delete_file(root, "data/del-1.parquet", [(fa, 1)])
+    md = _manifest(root, "md.avro", [_entry(dl, content=1)])
+    ml = _mlist(root, "snap-1.avro", [(m1, 0), (md, 1)])
+    _metadata(root, [{"snapshot-id": 1, "manifest-list": ml}], current=1)
+    _assert_dv_plan_has_no_regex(read_iceberg(spark, root))
