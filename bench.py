@@ -155,10 +155,13 @@ def _geo(d: dict[str, float]) -> float:
 
 def headline_line(total, timings, compile_total, floor, floor_scan, marginal,
                   ratios_raw, ratios_marg, breaches, extended, iterative,
-                  loadavg, sf_val, load_gate, floor_band=None) -> dict:
+                  loadavg, sf_val, load_gate, floor_band=None,
+                  cpu=None) -> dict:
     """The one self-contained JSON object the driver's stdout-tail capture
     must fully hold (~2000-char cap). Keep keys/prose lean — growth here is
-    regression-guarded by tests/test_bench_artifact.py."""
+    regression-guarded by tests/test_bench_artifact.py. ``cpu`` is the CPU
+    contract the numbers ran under, ``"<defaultParallelism>/<$SPARK_GRAFT_
+    CPUS, or * when unset>"``; loadavg is rounded to 0.1 to make room."""
     return {
         "metric": "headline_sweep_sec",
         "value": total,
@@ -186,9 +189,10 @@ def headline_line(total, timings, compile_total, floor, floor_scan, marginal,
         # make room for the r14 extended entries (SQL DML + indexed ANN)
         # under the ~2000-char tail cap.
         "iterative": iterative,
-        "loadavg": loadavg,
+        "loadavg": [round(x, 1) for x in loadavg],
         "fb": floor_band or {},
         "sf": sf_val,
+        "cpu": cpu,
     }
 
 
@@ -545,8 +549,9 @@ def main() -> None:
     print(json.dumps(headline_line(
         total, timings, compile_total, floor, floor_scan, marginal,
         ratios_raw, ratios_marg, breaches, extended, iterative,
-        [round(load_start, 2), round(os.getloadavg()[0], 2)], sf_val,
-        load_gate, floor_band)))
+        [load_start, os.getloadavg()[0]], sf_val, load_gate, floor_band,
+        f"{spark.sparkContext.defaultParallelism}/"
+        f"{os.environ.get('SPARK_GRAFT_CPUS', '*')}")))
 
     # Free the persisted LSH/SimHash build sides (one live cache per slot
     # survives the sweep otherwise — harmless at exit here, but the bench

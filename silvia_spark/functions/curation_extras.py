@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from silvia_spark.io import load_table
+from silvia_spark.io import ckpt_rdd, load_table
 from silvia_spark.registry import contract
 
 # --- J25: connected-components dedup clustering ------------------------------
@@ -62,17 +62,6 @@ SELECT doc_id, cluster_id,
 FROM cc
 ORDER BY doc_id
 """
-
-
-def _ckpt_rdd(df: DataFrame):
-    """Java RDD handle backing a localCheckpoint'ed DataFrame (its analyzed
-    plan is a LogicalRDD), for explicit block release. None when the
-    internals aren't reachable (e.g. Spark Connect) — callers then fall
-    back to ContextCleaner GC, the pre-r06 behavior."""
-    try:
-        return df._jdf.queryExecution().analyzed().rdd()
-    except Exception:
-        return None
 
 
 def _uf_find(parent: dict, x):
@@ -301,7 +290,7 @@ def min_label_components(pairs: DataFrame,
             # round's blocks stay live: the returned frame reads them.
             if prev_ck is not None:
                 prev_ck.unpersist(False)
-            prev_ck = _ckpt_rdd(merged)
+            prev_ck = ckpt_rdd(merged)
             labels = merged.select("src", "lbl")
             if changed == 0:
                 break

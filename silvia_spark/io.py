@@ -106,6 +106,17 @@ _table_cache: dict[tuple[int, str, str], DataFrame] = {}
 _events_ts_unit: dict[str, str] = {}
 
 
+def ckpt_rdd(df: DataFrame):
+    """Java RDD handle backing a localCheckpoint'ed DataFrame (its analyzed
+    plan is a LogicalRDD), for explicit block release. None when the
+    internals aren't reachable (e.g. Spark Connect) — callers then fall
+    back to ContextCleaner GC."""
+    try:
+        return df._jdf.queryExecution().analyzed().rdd()
+    except Exception:
+        return None
+
+
 def _sniff_events_ts_unit(sf_dir: str) -> str:
     unit = _events_ts_unit.get(sf_dir)
     if unit is None:

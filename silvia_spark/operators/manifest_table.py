@@ -67,7 +67,7 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from silvia_spark.io import (FILE_POS, join_file_pos, load_table,
+from silvia_spark.io import (FILE_POS, ckpt_rdd, join_file_pos, load_table,
                              local_path as _norm, with_file_pos)
 from silvia_spark.operators.manifest_fs import LeaseLost, LocalFS
 from silvia_spark.registry import contract
@@ -1580,6 +1580,8 @@ def commit_merge(spark: SparkSession, path: str, changes: DataFrame,
     """merge_keyed's MERGE plan, committed atomically across ALL touched
     partitions via one manifest flip:
 
+    (0) the change batch is materialized once, so every step below
+        sees the same rows;
     (1) touched-partition list + per-partition key min/max from the
         change batch (ONE tiny driver action);
     (2) current snapshot scanned PRUNED twice — to touched partitions
@@ -1611,6 +1613,23 @@ def commit_merge(spark: SparkSession, path: str, changes: DataFrame,
             f"{part_col!r}: without it the anti-join can delete rows in "
             "partitions the merge does not rewrite, leaving stale "
             "duplicates in the committed snapshot")
+    # Evaluate the change batch ONCE (Delta's merge.materializeSource):
+    # the range aggregate, the anti-join's key side and the payload each
+    # read ``changes``, and a nondeterministic batch (a UDF, rand(), a
+    # source that moves between reads) would pick the rewrite set on one
+    # evaluation and apply it to another — duplicated and lost keys.
+    changes = changes.localCheckpoint(eager=True)
+    rdd = ckpt_rdd(changes)
+    try:
+        return _merge_materialized(spark, path, changes, keys, part_col)
+    finally:
+        if rdd is not None:
+            rdd.unpersist(False)
+
+
+def _merge_materialized(spark: SparkSession, path: str, changes: DataFrame,
+                        keys: list[str], part_col: str) -> int:
+    """commit_merge's plan and commit over an already-materialized batch."""
     root = _norm(path)
     doc = _load_doc(root)
     if _mixed_specs(doc):

@@ -40,6 +40,21 @@ PG_BIN = "/usr/local/bin"
 AUTOBOOT_ROOT = "/tmp/silvia_pg_auto"
 
 
+def _resolve_psql() -> str:
+    """The psql client binary beside the server binaries (the real ELF
+    behind ``PG_BIN/initdb``'s symlink), else ``psql`` on PATH. On Debian
+    ``/usr/bin/psql`` is a Perl wrapper (pg_wrapper) that makes a
+    ``SELECT 1`` about four times slower than the binary it execs, and
+    one streamed drain makes nine calls."""
+    real = os.path.join(
+        os.path.dirname(os.path.realpath(os.path.join(PG_BIN, "initdb"))),
+        "psql")
+    return real if os.access(real, os.X_OK) else "psql"
+
+
+PSQL = _resolve_psql()
+
+
 def pg_host() -> str | None:
     """Socket dir / host of the ambient PostgreSQL, or None (degrade)."""
     return os.environ.get("SILVIA_PG_HOST")
@@ -55,10 +70,10 @@ def _run_as_pg(cmd: str) -> subprocess.CompletedProcess:
 
 
 def have_server_binaries() -> bool:
-    # server binaries live under PG_BIN symlinks; psql (client) is on PATH
+    # server binaries live under PG_BIN symlinks; the client beside them
     if not all(shutil.which(b, path=PG_BIN) for b in ("initdb", "pg_ctl")):
         return False
-    if shutil.which("psql") is None:
+    if shutil.which(PSQL) is None:
         return False
     if os.geteuid() != 0:
         return True  # non-root can run the server directly
@@ -162,7 +177,7 @@ def boot_server(root: str) -> None:
         root, f"SELECT 1 FROM pg_database WHERE datname = '{PG_DB}';",
         db="postgres").strip()
     if exists != "1":
-        p = _run_as_pg(f"psql -h {root} -U {PG_USER} -d postgres "
+        p = _run_as_pg(f"{PSQL} -h {root} -U {PG_USER} -d postgres "
                        f"-c 'CREATE DATABASE {PG_DB};'")
         if p.returncode != 0 and "already exists" not in p.stderr:
             raise RuntimeError(f"create db failed: {p.stderr[-2000:]}")
@@ -203,7 +218,7 @@ def run_psql(host: str, script: str, *, db: str = PG_DB) -> str:
     inline after its statement, terminated by ``\\.`` — exactly how psql
     consumes it."""
     proc = subprocess.run(
-        ["psql", "-h", host, "-U", PG_USER, "-d", db,
+        [PSQL, "-h", host, "-U", PG_USER, "-d", db,
          "-v", "ON_ERROR_STOP=1", "-qAt", "-f", "-"],
         input=script, capture_output=True, text=True, cwd="/tmp", check=False)
     if proc.returncode != 0:

@@ -11,12 +11,37 @@ Scale posture: AQE on (runtime partition coalescing, broadcast switching,
 skew-join splitting) so the same declarative plans re-optimize themselves on
 a 1000-executor cluster; shuffle partitions default to cores locally but are
 meant to be overridden (≈2-3× total cores) on a real cluster.
+
+Local filesystem (``local[...]`` masters on POSIX): pip PySpark ships no
+libhadoop, so Hadoop's ``RawLocalFileSystem`` forks a ``chmod`` for every
+file and directory it creates (``.crc`` sidecars included) and a
+``readlink`` for every ``getFileLinkStatus`` a ``FileContext`` rename
+makes — each 3–4 ms; on a 4-core VM they were about a quarter of the
+ingest benchmark's micro-batch latency (checkpoint source/offset/commit
+logs, staged parquet writes and their committer, DV sidecars, CDF files). ``get_session`` therefore
+compiles ``jvm/NioLocalFs.java`` once per machine (installed ``javac``,
+against PySpark's own ``hadoop-client-api`` jar, cached per user) and
+puts it on the driver classpath as ``fs.file.impl`` and
+``fs.AbstractFileSystem.file.impl``: the same checksummed local
+filesystem, answering those two calls through java.nio. Files, ``.crc``
+sidecars and permission bits are exactly what the stock classes write
+(tests/test_local_fs.py). Without ``javac``, on a failed compile, on a
+non-local master or when a JVM is already running it keeps the stock
+filesystem and warns once. Clusters are unaffected: their executors
+never see the jar, and HDFS/S3 paths never touch the ``file:`` classes.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import re
+import shutil
+import subprocess
+import tempfile
 import warnings
+import zipfile
 
 from pyspark.sql import SparkSession
 
@@ -103,6 +128,104 @@ def configure_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+_LOCAL_FS_SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                             "jvm", "NioLocalFs.java")
+LOCAL_FS_CONFS = {
+    "spark.hadoop.fs.file.impl": "silvia.fs.NioLocalFs$Local",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "silvia.fs.NioLocalFs$Fs",
+}
+_stock_fs_warned = False
+
+
+def _keep_stock_fs(reason: str) -> None:
+    """Warn (once per process) that the stock local filesystem stays."""
+    global _stock_fs_warned
+    if not _stock_fs_warned:
+        _stock_fs_warned = True
+        warnings.warn(f"silvia_spark: keeping Hadoop's stock local "
+                      f"filesystem ({reason}); file: writes fork chmod/"
+                      f"readlink per call", RuntimeWarning)
+
+
+def _javac_version(javac: str) -> str:
+    """The JDK's ``release`` file (its version, read without starting a
+    JVM), else the resolved ``javac`` path."""
+    home = os.path.dirname(os.path.dirname(os.path.realpath(javac)))
+    try:
+        with open(os.path.join(home, "release"), encoding="utf-8") as f:
+            return f.read()
+    except OSError:
+        return os.path.realpath(javac)
+
+
+def local_fs_jar() -> str | None:
+    """The compiled ``NioLocalFs`` jar, built on first use into a per-user
+    cache keyed by the source, the ``javac`` version and the Hadoop API
+    jar; None when it cannot be built. The cache is deliberately not
+    under ``$TMPDIR``, which callers may point at a per-run directory."""
+    javac = shutil.which("javac")
+    if javac is None:
+        return _keep_stock_fs("no javac on PATH")
+    import pyspark
+    api = sorted(glob.glob(os.path.join(os.path.dirname(pyspark.__file__),
+                                        "jars", "hadoop-client-api-*.jar")))
+    if not api:
+        return _keep_stock_fs("no hadoop-client-api jar in pyspark/jars")
+    with open(_LOCAL_FS_SRC, "rb") as f:
+        key = hashlib.sha256(f.read() + _javac_version(javac).encode()
+                             + os.path.basename(api[-1]).encode())
+    cache = os.path.join(os.environ.get("XDG_CACHE_HOME")
+                         or os.path.expanduser("~/.cache"), "silvia_spark")
+    jar = os.path.join(cache, f"niolocalfs-{key.hexdigest()[:16]}.jar")
+    if os.path.exists(jar):
+        return jar
+    build = tempfile.mkdtemp(prefix="silvia_niolocalfs_")
+    try:
+        p = subprocess.run([javac, "--release", "17", "-nowarn", "-cp",
+                            api[-1], "-d", build, _LOCAL_FS_SRC],
+                           capture_output=True, text=True)
+        if p.returncode != 0:
+            raise RuntimeError(p.stderr.strip()[-500:])
+        os.makedirs(cache, exist_ok=True)
+        tmp = f"{jar}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w") as z:
+            for d, _, files in os.walk(build):
+                for name in files:
+                    full = os.path.join(d, name)
+                    z.write(full, os.path.relpath(full, build))
+        os.replace(tmp, jar)  # atomic: a racing build writes the same jar
+        return jar
+    except (OSError, RuntimeError) as exc:
+        return _keep_stock_fs(f"NioLocalFs compile failed: {exc}")
+    finally:
+        shutil.rmtree(build, ignore_errors=True)
+
+
+def _local_fs_confs(master: str) -> dict[str, str]:
+    """Builder confs that swap in the fork-free local filesystem, or {}."""
+    if os.name != "posix":
+        return {}
+    if not re.fullmatch(r"local(\[[^\]]*\])?", master):
+        _keep_stock_fs(f"master {master} is not local")
+        return {}
+    from py4j.protocol import Py4JJavaError
+    from pyspark import SparkContext
+    if SparkContext._jvm is not None:
+        # The classpath was fixed when the JVM started: keep the new
+        # classes only if that launch (an earlier get_session) had them.
+        try:
+            SparkContext._jvm.java.lang.Class.forName(
+                LOCAL_FS_CONFS["spark.hadoop.fs.file.impl"])
+            return dict(LOCAL_FS_CONFS)
+        except Py4JJavaError:  # ClassNotFoundException
+            _keep_stock_fs("a JVM is already running")
+            return {}
+    jar = local_fs_jar()
+    if jar is None:
+        return {}
+    return {"spark.driver.extraClassPath": jar, **LOCAL_FS_CONFS}
+
+
 def get_session(app_name: str = "silvia_spark", master: str | None = None,
                 shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) a configured SparkSession.
@@ -135,6 +258,6 @@ def get_session(app_name: str = "silvia_spark", master: str | None = None,
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
-    for k, v in RUNTIME_CONFS.items():
+    for k, v in {**RUNTIME_CONFS, **_local_fs_confs(master)}.items():
         builder = builder.config(k, v)
     return configure_session(builder.getOrCreate())

@@ -66,7 +66,7 @@ def test_final_line_fits_tail_capture_worst_case(monkeypatch):
         extended=extended, iterative=iterative,
         loadavg=[12.34, 12.34], sf_val=0.1,
         load_gate={"deg": True, "gate": 2.0, "wait": 300},
-        floor_band={"x": 99.99, "deg": True, "rr": True}))
+        floor_band={"x": 99.99, "deg": True, "rr": True}, cpu="64/64"))
     assert len(line) <= _TAIL_BUDGET, (
         f"final bench line would be {len(line)} chars — trims needed "
         "(move a field to the diagnostics line) or the driver tail "
@@ -80,7 +80,7 @@ def test_extended_and_iterative_ride_the_final_line():
         {k: 0.05 for k in bench.HEADLINE}, {},
         {k: 0.02 for k in bench.EXTENDED},
         {k: 0.9 for k in bench.ITERATIVE}, [0.5, 1.0], 0.1,
-        {"deg": False, "gate": 2.0, "wait": 0})
+        {"deg": False, "gate": 2.0, "wait": 0}, cpu="4/*")
     assert set(line["extended"]) == set(bench.EXTENDED)
     assert set(line["iterative"]) == set(bench.ITERATIVE)
     assert "floor_scan_sec" in line and "raw_gate_breaches" in line
@@ -92,6 +92,8 @@ def test_extended_and_iterative_ride_the_final_line():
     # tests on _load_gate itself).
     assert line["qm"] == [0.005] * len(bench.HEADLINE)
     assert "load_gate" not in line
+    # the CPU contract rides the line: defaultParallelism/SPARK_GRAFT_CPUS
+    assert line["cpu"] == "4/*"
 
 
 def _baseline_md_headline_ms() -> dict[str, float]:

@@ -116,6 +116,31 @@ def test_crash_mid_adopt_keeps_old_snapshot(spark, tmp_path, monkeypatch):
     assert _rows(mt.read_snapshot(spark, root)) == _rows(_base(spark))
 
 
+def test_merge_reads_a_nondeterministic_batch_once(spark, tmp_path):
+    """commit_merge reads its change batch three times (range aggregate,
+    anti-join keys, payload). A batch that differs between reads — here a
+    nondeterministic coin flip — must still replace exactly the rows it
+    carries: no duplicated key, no lost key."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    root = str(tmp_path / "t")
+    base = spark.range(2000).select(
+        F.col("id").alias("k"), (F.col("id") % 4).cast("string").alias("part"),
+        F.col("id").cast("double").alias("v"))
+    mt.create_table(base, root, "part")
+    coin = F.udf(lambda: random.random(), "double").asNondeterministic()
+    chg = (base.where(coin() < 0.5)
+           .withColumn("v", F.col("v") + 0.5)
+           .withColumn("op", F.lit("U")))
+    mt.commit_merge(spark, root, chg, ["k", "part"], "part")
+    rows = mt.read_snapshot(spark, root).collect()
+    keys = [r.k for r in rows]
+    assert len(keys) == len(set(keys)) == 2000
+    assert 0 < sum(r.v != r.k for r in rows) < 2000
+
+
 def test_vacuum_retires_old_snapshots(spark, tmp_path):
     root = str(tmp_path / "t")
     mt.create_table(_base(spark), root, "part")

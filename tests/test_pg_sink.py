@@ -48,6 +48,16 @@ def pg_server():
         shutil.rmtree(root, ignore_errors=True)
 
 
+def test_psql_client_is_the_real_binary():
+    """Debian's /usr/bin/psql is a Perl wrapper (pg_wrapper) that adds
+    ~23 ms per call before the client starts; whenever server binaries
+    exist the sink must exec the ELF client beside them instead."""
+    if shutil.which("initdb", path=PG_BIN) is None:
+        pytest.skip("no PostgreSQL server binaries in this container")
+    with open(shutil.which(pglib.PSQL), "rb") as f:
+        assert f.read(4) == b"\x7fELF", pglib.PSQL
+
+
 def test_copy_upsert_replay_is_exactly_once(pg_server):
     """The merge keyed (batch_id, event_type): replaying an identical batch
     changes nothing; replaying a REVISED batch (Spark retry after partial
